@@ -15,7 +15,6 @@ Patterns covered (the standard production shapes):
 from __future__ import annotations
 
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -24,40 +23,23 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampNTZType,
     TimestampType,
 )
 
-EVENTS_SCHEMA = StructType([
-    StructField("event_id", LongType(), True),
-    # parquet TIMESTAMP(NANOS): Spark 4.1 reads it as TIMESTAMP_NTZ
-    # truncated to micros (forcing LongType here would ALSO yield micros,
-    # not nanos — see sources/io.py).  Declaring NTZ keeps the unit
-    # unambiguous; the reader casts NTZ -> timestamp below.
-    StructField("ts", TimestampNTZType(), True),
-    StructField("user_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-    StructField("props", StringType(), True),
-])
+from .drain import drain, run_available_now, scratch_dir, table_stream
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one file per batch).
 
-    ``ts`` decode mirrors the batch path (``sources/io.py``): the NTZ
-    value is reinterpreted as a UTC instant (session tz is UTC, so the
-    cast is bit-for-bit identical to the batch result)."""
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-    return raw.withColumn("ts", F.col("ts").cast(TimestampType()))
+    ``ts`` decode mirrors the batch path (``sources/io.py``): the stream
+    reads with the batch reader's schema, so ``ts`` is the same UTC
+    instant (session tz is UTC, so the cast is bit-for-bit identical to
+    the batch result)."""
+    return table_stream(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast(TimestampType()))
 
 
 def windowed_event_counts(
@@ -126,64 +108,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_available_now(stream_df: DataFrame, query_name: str,
-                      output_mode: str = "complete",
-                      state_partitions: int = 8):
-    """Drain every available input with AvailableNow into a memory sink;
-    returns the already-TERMINATED StreamingQuery (a further
-    ``awaitTermination()`` is a no-op; read ``SELECT * FROM
-    <query_name>``).  Use ``complete`` for windowed aggs (finite corpus
-    → last windows never pass the watermark in append mode), ``update``
-    for stateful operators.
-
-    The drain runs under a scoped ``spark.sql.shuffle.partitions``
-    override (restored afterwards): every stateful operator pays a
-    state-store commit PER SHUFFLE PARTITION per micro-batch, which is
-    pure fixed overhead at gate-corpus state sizes — measured at
-    sf0.1/local[32], 32 → 8 partitions halves the streaming queries'
-    wall (events_error_click_pairs 5.7 → 3.0 s, events_hourly 1.7 →
-    1.0 s) with identical results (hash-pinned by the oracles; state
-    partitioning never affects WHAT is emitted).  At real scale size
-    ``state_partitions`` to state volume instead — the override is
-    per-drain, not a session default.
-
-    A leftover sink table from an earlier run in the same session is
-    dropped first — append-mode memory sinks would otherwise accumulate
-    across reruns."""
-    spark = stream_df.sparkSession
-    try:
-        spark.catalog.dropTempView(query_name)
-    except Exception:
-        pass
-    with scoped_state_partitions(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
-
-
-@contextmanager
-def scoped_state_partitions(spark: SparkSession, n: int = 8):
-    """Scoped ``spark.sql.shuffle.partitions`` override for a streaming
-    drain (see ``run_available_now`` for the measurement); also used by
-    the foreachBatch drains in ``streaming.documents``/``.vectors``,
-    where 32 → 8 cut wall ~25-35% at sf0.1 (the per-micro-batch join
-    input is a fraction of the corpus, so fewer-but-fuller partitions
-    win).  Always restored — the override must never leak into the
-    session's batch queries."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def streaming_dedup(
@@ -257,8 +181,7 @@ def streaming_near_dup_against_corpus(
     return (
         stream_docs.writeStream.foreachBatch(process)
         .trigger(availableNow=True)
-        .option("checkpointLocation",
-                f"/tmp/lsh_spark_ckpt_{sink_table}")
+        .option("checkpointLocation", scratch_dir(f"ckpt_{sink_table}"))
         .start()
     )
 
@@ -546,12 +469,7 @@ def events_hourly_append_streaming(spark: SparkSession,
     cut = lo.replace(minute=0, second=0, microsecond=0) + (hi - lo) / 2
     cut = cut.replace(minute=0, second=0, microsecond=0)
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = f"/tmp/lsh_spark_stream_append_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_append_{tag}"
-    for d in (stage, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(stage)
+    stage = scratch_dir(f"append_{os.path.basename(sf_dir.rstrip('/'))}")
     # stage each half as one file; mtime + name order early-before-late so
     # the file source replays them as two in-order micro-batches
     for name, half in (("a_early", ev.where(F.col("ts") < F.lit(cut))),
@@ -611,55 +529,19 @@ def events_spikes_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame over unbounded history is not a streaming-state shape); the
     partials-then-finalize split is the standing monitor deployment:
     cheap incremental writes, one bounded read-back per report."""
-    import os
-    import shutil
-
     from ..operators.relational import spikes_from_hourly
-    from ..sources.io import _ensure_session_confs, load_table
-    from .documents import _write_batch_idempotent
 
-    _ensure_session_confs(spark)
-    ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/lsh_spark_stream_spikes_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_spikes_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
+    partials = drain(
+        spark, table_stream(spark, sf_dir, "events"),
+        lambda batch_df: (
             batch_df.groupBy(
                 "event_type",
                 F.date_format(F.date_trunc("hour", F.col("ts")),
                               "yyyy-MM-dd HH:mm:ss").alias("hour"))
-            .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-        )
-        _write_batch_idempotent(partial, out_dir, batch_id)
-
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "event_type string, hour string, n_events long, "
-            "trail_n long, trail_sum long, "
-            "ratio_to_trailing_mean double, is_spike boolean")
+            .agg(F.count(F.lit(1)).cast("long").alias("__n"))),
+        "stream_spikes", sf_dir, "event_type string, hour string, __n long")
     hourly = (
-        spark.read.parquet(out_dir)
+        partials
         .groupBy("event_type", "hour")
         .agg(F.sum("__n").cast("long").alias("n_events"))
     )
@@ -681,54 +563,23 @@ def hll_users_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, deduplicated again at read-back — the piece a 100 TB
     deployment drops (that is the POINT of the sketch); the mergeable
     register maxima alone are what the monitor keeps."""
-    import os
-    import shutil
-
     from ..operators.pipeline_queries import hll_finalize, hll_rho_rows
-    from ..sources.io import _ensure_session_confs, load_table
-    from .documents import _write_batch_idempotent
 
-    _ensure_session_confs(spark)
-    ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_regs = f"/tmp/lsh_spark_stream_hllu_regs_{tag}"
-    out_items = f"/tmp/lsh_spark_stream_hllu_items_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_hllu_{tag}"
-    for d in (out_regs, out_items, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def per_batch(batch_df: DataFrame) -> dict[str, DataFrame]:
         rows = hll_rho_rows(batch_df, "event_type", "user_id")
-        regs = rows.groupBy("__grp", "__idx").agg(
-            F.max("__rho").alias("__m"))
-        _write_batch_idempotent(regs, out_regs, batch_id)
-        items = rows.select("__grp", "__u", "__idx").distinct()
-        _write_batch_idempotent(items, out_items, batch_id)
+        return {
+            "regs": rows.groupBy("__grp", "__idx").agg(
+                F.max("__rho").alias("__m")),
+            "items": rows.select("__grp", "__u", "__idx").distinct(),
+        }
 
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_regs) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_regs)):
-        return spark.createDataFrame(
-            [], "event_type string, n_registers long, sum_rho long, "
-            "exact_distinct long, est_distinct double")
-    m = (spark.read.parquet(out_regs)
+    out = drain(spark, table_stream(spark, sf_dir, "events"), per_batch,
+                "stream_hllu", sf_dir,
+                {"regs": "__grp string, __idx int, __m int",
+                 "items": "__grp string, __u string, __idx int"})
+    m = (out["regs"]
          .groupBy("__grp", "__idx").agg(F.max("__m").alias("__m")))
-    nd = (spark.read.parquet(out_items).select("__grp", "__u", "__idx")
+    nd = (out["items"].select("__grp", "__u", "__idx")
           .distinct()
           .groupBy("__grp", "__idx")
           .agg(F.countDistinct("__u").alias("__nd")))

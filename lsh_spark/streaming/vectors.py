@@ -18,13 +18,12 @@ probe + rerank.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.formats import index_meta
-from .documents import _write_batch_idempotent
+from .drain import drain, table_stream
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
@@ -74,49 +73,17 @@ def ann_ivf_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``ANN_IVF_LLOYD_ORACLE``)."""
     from ..operators.ann import search_ivf_index
     from ..operators.pipeline_queries import _ANN_K, _IVF_PROBE, _N_QUERIES
-    from ..sources.io import load_table
 
     index = ensure_ivf_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("vec_id") < _N_QUERIES)
-    )
-    out_dir = f"/tmp/lsh_spark_stream_ivf_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_ivf_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = search_ivf_index(spark, index, batch_df,
-                               k=_ANN_K, n_probe=_IVF_PROBE)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, "
-                "rank int")
-    return spark.read.parquet(out_dir).select(
-        "query_id", "neighbor_id", "cosine_sim", "rank")
+    return drain(
+        spark,
+        table_stream(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < _N_QUERIES),
+        lambda batch_df: search_ivf_index(spark, index, batch_df,
+                                          k=_ANN_K, n_probe=_IVF_PROBE),
+        "stream_ivf", sf_dir,
+        "query_id long, neighbor_id long, cosine_sim double, rank int",
+    ).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def ann_pq_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,48 +96,16 @@ def ann_pq_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable)."""
     from ..operators.ann import search_pq_index
     from ..operators.pipeline_queries import _ANN_K, _N_QUERIES
-    from ..sources.io import load_table
 
     index = ensure_pq_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("vec_id") < _N_QUERIES)
-    )
-    out_dir = f"/tmp/lsh_spark_stream_pq_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_pq_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = search_pq_index(spark, index, batch_df, k=_ANN_K)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, approx_dist double, "
-                "rank int")
-    return spark.read.parquet(out_dir).select(
-        "query_id", "neighbor_id", "approx_dist", "rank")
+    return drain(
+        spark,
+        table_stream(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < _N_QUERIES),
+        lambda batch_df: search_pq_index(spark, index, batch_df, k=_ANN_K),
+        "stream_pq", sf_dir,
+        "query_id long, neighbor_id long, approx_dist double, rank int",
+    ).select("query_id", "neighbor_id", "approx_dist", "rank")
 
 
 def _oracle() -> str:

@@ -9,13 +9,14 @@ runs the named gate query end-to-end the way bench.py does, and prints:
     (addBatch / getBatch / latestOffset / queryPlanning / walCommit /
     commitOffsets / triggerExecution), state-store metrics
   * the residual = function wall - sum(streaming walls), i.e. setup
-    (rmtree, plan construction, index ensure) + read-back/terminal
+    (scratch clear, plan construction, index ensure) + read-back/terminal
 
 Usage: python3 scripts/profile_streaming.py <query> [<query> ...] [--runs N]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -24,13 +25,27 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _await_terminations(events: list[dict], timeout_s: float = 30.0) -> None:
+    """Listener events arrive asynchronously: wait (bounded) until every
+    stream that reported a start also reported its termination, so one
+    run's late progress never lands in the next run's stitch."""
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline:
+        started = {e["id"] for e in events if e["kind"] == "start"}
+        ended = {e["id"] for e in events if e["kind"] == "term"}
+        if started <= ended:
+            return
+        time.sleep(0.05)
+    print(f"!! listener: {len(started - ended)} stream(s) reported no "
+          f"termination within {timeout_s:.0f}s")
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    runs = 1
-    for a in sys.argv[1:]:
-        if a.startswith("--runs"):
-            runs = int(a.split("=", 1)[1]) if "=" in a else int(
-                sys.argv[sys.argv.index(a) + 1])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="+", help="registered query names")
+    ap.add_argument("--runs", type=int, default=1,
+                    help="runs per query (default 1)")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -76,11 +91,11 @@ def main() -> None:
     qs = entry.queries()
     spark.range(1000).count()
 
-    for name in args:
+    for name in args.queries:
         if name not in qs:
             print(f"!! unknown query {name}")
             continue
-        for r in range(runs):
+        for r in range(args.runs):
             events.clear()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
@@ -91,6 +106,7 @@ def main() -> None:
                 df.count()
             t_total = time.perf_counter() - t0
             spark.catalog.clearCache()
+            _await_terminations(events)
             # stitch per-stream walls
             streams: dict[str, dict] = {}
             for e in events:

@@ -149,29 +149,86 @@ def test_streaming_dedup_and_udf(spark):
 
 
 def test_streaming_near_dup_foreachbatch(spark, tmp_path):
-    import shutil
-
     from lsh_spark.sources.io import load_table
     from lsh_spark.streaming.events import streaming_near_dup_against_corpus
 
-    shutil.rmtree("/tmp/lsh_spark_ckpt_stream_matches", ignore_errors=True)
     corpus = load_table(spark, SF_DIR, "documents").where("doc_id >= 250")
     # stream the first 250 docs in as files
     incoming = load_table(spark, SF_DIR, "documents").where("doc_id < 250")
     src_dir = str(tmp_path / "incoming")
     incoming.write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(incoming.schema).parquet(src_dir)
 
-    q = streaming_near_dup_against_corpus(
-        stream, corpus, "stream_matches", threshold=0.6)
-    q.awaitTermination(180)
-    got = spark.table("stream_matches")
-    n = got.count()
-    assert n > 0
-    assert set(got.columns) == {"doc_id_left", "doc_id_right", "jaccard"}
-    # every match pairs an incoming doc (<250) with a corpus doc (>=250)
-    assert got.where("doc_id_left >= 250 OR doc_id_right < 250").count() == 0
+    # a rerun over the same source in one process must not resume the
+    # first call's checkpoint (which would skip every committed file)
+    runs = []
+    for _ in range(2):
+        stream = spark.readStream.schema(incoming.schema).parquet(src_dir)
+        q = streaming_near_dup_against_corpus(
+            stream, corpus, "stream_matches", threshold=0.6)
+        q.awaitTermination(180)
+        got = spark.table("stream_matches")
+        assert set(got.columns) == {"doc_id_left", "doc_id_right", "jaccard"}
+        # every match pairs an incoming doc (<250) with a corpus doc (>=250)
+        assert got.where(
+            "doc_id_left >= 250 OR doc_id_right < 250").count() == 0
+        runs.append({tuple(r) for r in got.collect()})
+    assert runs[0] and runs[0] == runs[1]
     spark.sql("DROP TABLE IF EXISTS stream_matches")
+
+
+def test_scratch_dirs_are_per_process():
+    """Two processes draining the same query on the same SF get disjoint
+    scratch roots under the same TMPDIR: the second never clears the
+    first's live files, and its root is gone once it exits."""
+    import os
+    import subprocess
+    import sys
+
+    from lsh_spark.streaming.drain import scratch_dir, scratch_root
+
+    key = "isolation_sf0.001"
+    mine = scratch_dir(key)
+    marker = os.path.join(mine, "live")
+    with open(marker, "w") as f:
+        f.write("x")
+    code = ("from lsh_spark.streaming.drain import scratch_dir, scratch_root;"
+            f"scratch_dir({key!r}); print(scratch_root())")
+    child = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=120, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    child_root = child.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(child_root) == os.path.dirname(scratch_root())
+    assert child_root != scratch_root()
+    assert os.path.exists(marker)
+    assert not os.path.exists(child_root)
+
+
+def test_drain_is_the_only_foreachbatch():
+    """Source guard: no hardcoded shared scratch path, and no copy of the
+    drain outside ``streaming/drain.py`` (the corpus-table sink of
+    ``streaming_near_dup_against_corpus`` is the one other
+    foreachBatch)."""
+    import ast
+    import pathlib
+
+    import lsh_spark
+
+    pkg = pathlib.Path(lsh_spark.__file__).parent
+    stray = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        assert "/tmp/lsh_spark" not in src, path
+        if path == pkg / "streaming" / "drain.py":
+            continue
+        allowed = "".join(
+            ast.get_source_segment(src, node)
+            for node in ast.parse(src).body
+            if isinstance(node, ast.FunctionDef)
+            and node.name == "streaming_near_dup_against_corpus")
+        if src.count(".foreachBatch(") != allowed.count(".foreachBatch("):
+            stray.append(str(path.relative_to(pkg)))
+    assert not stray
 
 
 def test_multimodal_resize_and_frames(spark):
